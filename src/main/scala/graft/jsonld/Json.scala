@@ -300,16 +300,6 @@ object Json {
     sb.append('"')
   }
 
-  /** Newtonsoft-style JSON escaping of a bare string value, as produced by
-    * `JsonConvert.SerializeObject(value).Trim('"')`
-    * (/root/reference/src/json-ld.net/Core/RDFDataset.cs:771). */
-  def jsonEscapeTrimmed(s: String): String = {
-    val sb = new java.lang.StringBuilder
-    writeString(s, sb)
-    val out = sb.toString
-    out.substring(1, out.length - 1)
-  }
-
   /** .NET `double.ToString()` approximation: whole values print without
     * a decimal point, otherwise shortest round-trip form. Used only by
     * the DeepCompare scalar fallback in tests. */

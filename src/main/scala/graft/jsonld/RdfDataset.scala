@@ -140,8 +140,6 @@ final class RdfDataset {
   private val context = mutable.LinkedHashMap.empty[String, String]
 
   def setNamespace(ns: String, iri: String): Unit = context.put(ns, iri)
-  def getNamespace(ns: String): String = context.getOrElse(ns, null)
-  def clearNamespaces(): Unit = context.clear()
   def getNamespaces: mutable.LinkedHashMap[String, String] = context
 
   /** Harvest namespaces from a JSON-LD @context object

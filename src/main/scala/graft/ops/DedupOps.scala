@@ -81,11 +81,6 @@ object DedupOps {
 
   // ---------------- MinHash + LSH ----------------
 
-  /** LSH bucket rows: (doc_id, sig, band, bucket) — the equi-join key
-    * space for candidate generation. */
-  def lshBuckets(documents: DataFrame, k: Int = 64, bands: Int = 16): DataFrame =
-    explodeBuckets(sketches(documents, k, bands))
-
   private def explodeBuckets(sk: DataFrame): DataFrame =
     sk.select(col("doc_id"), col("sig"),
       posexplode(col("band_buckets")).as(Seq("band", "bucket")))
@@ -356,7 +351,7 @@ object DedupOps {
     // explode + both verify sides); a compact persisted artifact would
     // otherwise run each fused scan→explode stage on its split count —
     // one core, measured 0.5–0.9 s/branch at bench scale
-    // (QueryStageProbe) — while the spread is a no-op on the
+    // (per-stage task profile) — while the spread is a no-op on the
     // production multi-file shape
     val sets = Spread.minParallel(sets0, "doc_id")
     val dt = sets.select(col("doc_id"), size(col("shingles")).cast("long").as("m"),

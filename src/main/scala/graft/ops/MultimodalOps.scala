@@ -186,8 +186,4 @@ object MultimodalOps {
       }
     }
   }
-
-  /** Resize stub: emits metadata-updated rows (real impl re-encodes). */
-  def resize(media: Dataset[MediaRow], w: Int, h: Int): DataFrame =
-    media.toDF().withColumn("width", lit(w)).withColumn("height", lit(h))
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.col
   * whole fused scan→tokenize/explode/hash stage on ONE core no matter
   * how many the session has (measured: the 5000-row single-file
   * `shingle_sets` scan+explode+agg stage ran 1 task for 0.5–0.9 s while
-  * 31 cores idled, QueryStageProbe). Operators whose first phase does
+  * 31 cores idled, per-stage task profile). Operators whose first phase does
   * heavy per-row compute call [[minParallel]] on their input: when the
   * scan already carries at least the session's configured shuffle
   * parallelism — the production multi-file shape at corpus scale — it

@@ -15,12 +15,6 @@ object TextOps {
   def tokenCount(text: Column): Column =
     size(split(trim(text), "\\s+"))
 
-  /** BPE-ish subword count approximation: words + punctuation runs.
-    * (Lookahead-based split — Java-regex only; prefer [[bpeTokenCount]],
-    * whose pattern is RE2-compatible and therefore oracle-checkable.) */
-  def subwordCount(text: Column): Column =
-    size(split(text, "(?=[\\p{Punct}])|\\s+"))
-
   /** GPT-2-style pretokenizer pattern, restricted to constructs shared by
     * Java regex and RE2 (no lookahead, no \p classes — the corpus is
     * ASCII): contraction suffixes, space-prefixed letter/digit runs,

@@ -580,78 +580,48 @@ object GraphMaterialize {
     * nodes < ~1e8 to stay in a signed 64-bit long; at larger graphs
     * shrink the unit (e.g. 1e6) — the ranking is unit-invariant.
     *
-    * Scale shape: edges+degrees are computed ONCE and localCheckpointed
-    * LAZILY (each iteration references them; an un-truncated chain would
-    * re-scan the triple table per iteration — the multi-branch rule; the
-    * lazy form materializes the blocks inside the first consuming job and
-    * ReuseExchange serves every later iteration, so no standalone
-    * checkpoint job runs — optimization r6). Per iteration: one equi-join
-    * on src + one hash agg on dst, 24-byte rows, map-side partial sums.
-    * Score frames are checkpointed LAZILY per round: the logical plan
-    * each round hands Catalyst stays O(1)-deep (an unrolled 6-iteration
-    * plan was A/B-measured ~20% SLOWER than round 5 purely from
-    * superlinear optimizer/AQE cost on the deep join tree), but no
-    * per-round job runs — the caller's one action materializes the whole
-    * cached-RDD chain. */
-  def hubScores(triples: DataFrame, iterations: Int = 6): DataFrame = {
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct()
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // (src, dst, out_degree) — the loop-invariant frame, built once
-    val withDeg = edges.join(outDeg, Seq("src")).localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    var scores = nodes.select(col("node"), lit(1000000000L).as("score"))
-    for (_ <- 1 to iterations) {
-      val inSums = withDeg
-        .join(scores.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), expr("score div d").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("insum"))
-      scores = nodes.join(inSums, Seq("node"), "left")
-        .select(col("node"),
-          (lit(150000000L) + expr("(85 * coalesce(insum, 0L)) div 100")).as("score"))
-        .localCheckpoint(false)
-    }
-    scores
-  }
+    * Scale shape: edges, nodes and degrees are computed ONCE and
+    * localCheckpointed LAZILY ([[entityGraph]]; each iteration references
+    * them; an un-truncated chain would re-scan the triple table per
+    * iteration — the multi-branch rule; the lazy form materializes the
+    * blocks inside the first consuming job and ReuseExchange serves every
+    * later iteration, so no standalone checkpoint job runs — optimization
+    * r6). Per iteration: one equi-join on src + one hash agg on dst,
+    * 24-byte rows, map-side partial sums. Score frames are checkpointed
+    * LAZILY per round: the logical plan each round hands Catalyst stays
+    * O(1)-deep (an unrolled 6-iteration plan was A/B-measured ~20% SLOWER
+    * than round 5 purely from superlinear optimizer/AQE cost on the deep
+    * join tree), but no per-round job runs — the caller's one action
+    * materializes the whole cached-RDD chain. */
+  def hubScores(triples: DataFrame, iterations: Int = 6): DataFrame =
+    pageRank(triples, lit(true), iterations)
 
   /** Personalized PageRank (random walk with restart) over the directed
     * entity graph: [[hubScores]] with the teleport mass concentrated on a
     * SEED set instead of spread uniformly — scores rank entities by
     * closeness to the seeds' neighborhood (topic-conditional importance:
     * "which entities matter *around these*", where global PageRank
-    * answers "which matter overall"). Same integer fixed-point rule as
-    * [[hubScores]] (scores in 1e-9 units, per-edge contribution
-    * `score div out_degree`, damping 85/100 via exact integer ops) so a
-    * staged-CTE SQL oracle replays every iteration bit-for-bit; seeds
-    * restart at 150000000 per iteration, non-seeds at 0, init 1e9 on
-    * seeds only.
-    *
-    * Scale shape inherited from [[hubScores]]: the loop-invariant
-    * (src, dst, out_degree) frame and the node set are lazily
-    * checkpointed once (materialized inside the first consuming job,
-    * ReuseExchange thereafter); each iteration is one key-partitioned
-    * join + one map-side-combining sum agg; scores are 16-byte
-    * (node, long) rows, lazily checkpointed per round (flat per-round
-    * plans, zero per-round jobs — the hubScores r6 discipline). The
-    * seed predicate is a broadcast-trivial `isin` literal (seed sets
-    * are human-scale). */
+    * answers "which matter overall"). Same integer fixed-point loop as
+    * [[hubScores]], so a staged-CTE SQL oracle replays every iteration
+    * bit-for-bit; seeds restart at 150000000 per iteration, non-seeds at
+    * 0, init 1e9 on seeds only. The seed predicate is a broadcast-trivial
+    * `isin` literal (seed sets are human-scale). */
   def personalizedPageRank(triples: DataFrame, seeds: Seq[String],
       iterations: Int = 6): DataFrame = {
     require(seeds.nonEmpty, "seed set must be non-empty")
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct()
+    pageRank(triples, col("node").isin(seeds: _*), iterations)
+  }
+
+  /** The integer PageRank loop of [[hubScores]] and
+    * [[personalizedPageRank]]: nodes matching `isSeed` start at 1e9 and
+    * restart at 150000000 per iteration, the rest at 0. `hubScores`
+    * passes `lit(true)`, and Catalyst folds the `CASE` to the literal. */
+  private def pageRank(triples: DataFrame, isSeed: org.apache.spark.sql.Column,
+      iterations: Int): DataFrame = {
+    val (edges, nodes) = entityGraph(triples)
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    // (src, dst, out_degree) — the loop-invariant frame, built once
     val withDeg = edges.join(outDeg, Seq("src")).localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    val isSeed = col("node").isin(seeds: _*)
     var scores = nodes.select(col("node"),
       when(isSeed, lit(1000000000L)).otherwise(lit(0L)).as("score"))
     for (_ <- 1 to iterations) {
@@ -666,6 +636,20 @@ object GraphMaterialize {
         .localCheckpoint(false)
     }
     scores
+  }
+
+  /** The directed entity graph of [[hubScores]], [[personalizedPageRank]]
+    * and [[hitsScores]]: distinct (src, dst) IRI edges without self-loops
+    * and their node set, both lazily localCheckpointed. */
+  private def entityGraph(triples: DataFrame): (DataFrame, DataFrame) = {
+    val edges = triples
+      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
+      .select(col("subj").as("src"), col("objValue").as("dst"))
+      .distinct().localCheckpoint(false)
+    val nodes = edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node")))
+      .distinct().localCheckpoint(false)
+    (edges, nodes)
   }
 
   /** HITS hubs/authorities over the directed entity graph (Kleinberg
@@ -698,19 +682,13 @@ object GraphMaterialize {
     * half-step — the eager round-5 form ran three jobs per half-step
     * (raw checkpoint, scalar collect, rescale checkpoint; 18+ jobs at
     * iterations=3), this runs the caller's one action plus the bounded
-    * broadcast sub-stages (A/B in HitsProbe: ~20-25% faster at sf0.1,
+    * broadcast sub-stages (same-window A/B: ~20-25% faster at sf0.1,
     * and at cluster scale each removed collect is a removed
     * full-pipeline barrier). `raw` is lazily checkpointed because both
     * the max aggregate and the rescale join consume it; plans stay
     * O(1)-deep per half-step exactly as before. */
   def hitsScores(triples: DataFrame, iterations: Int = 3): DataFrame = {
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct().localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
+    val (edges, nodes) = entityGraph(triples)
 
     // one rescaled half-step: raw in-sums joined back onto all nodes
     // (score 0 where no edge contributes), scaled to max 1e6 —

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions._
 import graft.jsonld._
 
 /** Per-document JSON-LD → triples core, run inside one narrow flatMap
@@ -38,11 +39,21 @@ object TripleEmit {
     java.lang.Long.toUnsignedString(k1, 36) + "x" + java.lang.Long.toUnsignedString(k2, 36)
   }
 
+  private val TripleCols = Seq("subj", "pred", "objKind", "objValue", "objDatatype", "objLang", "graph")
+
   private[pipeline] def prefixBnode(value: String, key: String): String =
     if (value.startsWith("_:")) "_:d" + key + "." + value.substring(2) else value
 
+  /** Quarantine code of a document whose nesting exhausted the task
+    * thread's stack. */
+  val StackExhausted = "stack exhausted"
+
   /** One extracted block → triples (+ optional canonicalized bnode names).
     * Errors return Left(quarantine) — a bad page must not kill the job.
+    * A `StackOverflowError` (a deeply nested document) is caught here as
+    * the last line of defence at the document boundary: the stack is
+    * unwound by the time the handler runs, and an uncaught one aborts the
+    * stage (and on a cluster takes the executor JVM down).
     * `contextCache` (url -> raw JSON) resolves remote `@context`
     * references offline (ContextCache — the S1 stand-in); when empty,
     * any remote context quarantines the document. */
@@ -84,38 +95,16 @@ object TripleEmit {
       case e: Exception =>
         Left(QuarantineRow(doc.url, doc.block_idx, "internal error",
           s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-    }
-  }
-
-  /** The distributed spine. Quarantined rows are counted via an
-    * accumulator; callers wanting the rows use `quarantine`. */
-  def triples(docs: Dataset[ExtractedDoc], normalizeBNodes: Boolean = false,
-              contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { doc =>
-      docToTriples(doc, normalizeBNodes, null, contextCache) match {
-        case Right(ts) => ts
-        case Left(_)   => Vector.empty[Triple]
-      }
-    }
-  }
-
-  def quarantine(docs: Dataset[ExtractedDoc],
-                 contextCache: Map[String, String] = Map.empty): Dataset[QuarantineRow] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { doc =>
-      docToTriples(doc, normalizeBNodes = false, null, contextCache) match {
-        case Left(q) => Some(q)
-        case _       => None
-      }
+      case _: StackOverflowError =>
+        Left(QuarantineRow(doc.url, doc.block_idx, StackExhausted,
+          s"nesting too deep for the stack (${doc.payload.length} chars)"))
     }
   }
 
   /** Corpus-level dedup: map-side partial aggregation via dropDuplicates
     * (hash-aggregate with partial combine — the only shuffle in the
     * extract→triples path). */
-  def dedup(ts: Dataset[Triple]): Dataset[Triple] =
-    ts.dropDuplicates("subj", "pred", "objKind", "objValue", "objDatatype", "objLang", "graph")
+  def dedup(ts: Dataset[Triple]): Dataset[Triple] = ts.dropDuplicates(TripleCols)
 
   /** End-to-end: pages → extracted docs → deduplicated triples.
     *
@@ -125,55 +114,43 @@ object TripleEmit {
     * deserialize of the ~2KB html rows) at every boundary. The only
     * shuffle left is the dedup hash-aggregate. */
   def pipeline(pages: Dataset[Page], normalizeBNodes: Boolean = false,
-               contextCache: Map[String, String] = Map.empty): Dataset[Triple] =
-    dedup(triplesFused(pages, normalizeBNodes, contextCache))
+               contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
+    import pages.sparkSession.implicits._
+    dedup(pages.flatMap(page =>
+      pageEmit(page, normalizeBNodes, contextCache).flatMap(_.getOrElse(Vector.empty[Triple]))))
+  }
 
-  /** One page's extracted documents — THE extraction enumeration (block
-    * order, indexing, microdata offset) shared by every emit variant;
-    * a change here changes all of them together (review r5: three
-    * verbatim copies risked silent divergence). */
-  private def pageDocs(page: Page): Iterator[ExtractedDoc] = {
+  /** THE per-page emit loop shared by every emit variant: the extraction
+    * enumeration (block order, indexing, microdata offset) and one
+    * [[docToTriples]] result per extracted document. A change here changes
+    * all of them together (review r5: verbatim copies risked silent
+    * divergence). */
+  private def pageEmit(page: Page, normalizeBNodes: Boolean,
+      contextCache: Map[String, String]): Iterator[Either[QuarantineRow, Vector[Triple]]] = {
     val html = new String(page.html, java.nio.charset.StandardCharsets.UTF_8)
     val blocks = Extract.scriptBlocksTolerant(html)
     val micro = Extract.microdataBlocks(html)
-    blocks.iterator.zipWithIndex.map { case (p, i) =>
+    val docs = blocks.iterator.zipWithIndex.map { case (p, i) =>
       ExtractedDoc(page.url, i, p, "jsonld")
     } ++ micro.iterator.zipWithIndex.map { case (p, i) =>
       ExtractedDoc(page.url, blocks.size + i, p, "microdata")
     }
-  }
-
-  /** The fused narrow stage without the dedup shuffle. */
-  def triplesFused(pages: Dataset[Page], normalizeBNodes: Boolean = false,
-                   contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
-    import pages.sparkSession.implicits._
-    pages.flatMap { page =>
-      pageDocs(page).flatMap { doc =>
-        docToTriples(doc, normalizeBNodes, null, contextCache) match {
-          case Right(t) => t
-          case Left(_)  => Vector.empty[Triple]
-        }
-      }
-    }
+    docs.map(docToTriples(_, normalizeBNodes, null, contextCache))
   }
 
   /** The fused narrow stage with each emitted triple carrying its source
     * url — the provenance emission. Same single-decode extraction as
-    * [[triplesFused]], one extra string column, still zero shuffles;
+    * [[pipeline]], one extra string column, still zero shuffles;
     * the per-triple source table this produces is what
     * [[provenance]] aggregates (and at production scale the artifact
     * you'd persist bucketed by subj next to the deduplicated triples). */
   def triplesWithSource(pages: Dataset[Page],
-      contextCache: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
+      contextCache: Map[String, String] = Map.empty): DataFrame = {
     import pages.sparkSession.implicits._
     pages.flatMap { page =>
-      pageDocs(page).flatMap { doc =>
-        docToTriples(doc, normalizeBNodes = false, null, contextCache) match {
-          case Right(ts) => ts.map(t => (page.url, t.subj, t.pred, t.objKind,
-            t.objValue, t.objDatatype, t.objLang, t.graph))
-          case Left(_) => Vector.empty
-        }
-      }
+      pageEmit(page, normalizeBNodes = false, contextCache)
+        .flatMap(_.getOrElse(Vector.empty[Triple]))
+        .map(t => (page.url, t.subj, t.pred, t.objKind, t.objValue, t.objDatatype, t.objLang, t.graph))
     }.toDF("url", "subj", "pred", "objKind", "objValue",
       "objDatatype", "objLang", "graph")
   }
@@ -186,14 +163,11 @@ object TripleEmit {
     * Scale shape: one aggregation keyed by the 7 triple columns; the
     * distinct-url count is Spark's standard two-phase distinct agg,
     * partial map-side. */
-  def provenance(withSource: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  def provenance(withSource: DataFrame): DataFrame =
     withSource
-      .groupBy(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"))
+      .groupBy(TripleCols.map(col): _*)
       .agg(countDistinct(col("url")).as("n_sources"),
         min(col("url")).as("first_url"))
-  }
 
   /** Single-pass keyed emit for the resumable job: the same fused narrow
     * stage, but every output row carries the page's lineage partition key
@@ -204,14 +178,28 @@ object TripleEmit {
     import pages.sparkSession.implicits._
     pages.flatMap { page =>
       val key = Lineage.hostBucket(page.url)
-      pageDocs(page).flatMap { doc =>
-        docToTriples(doc, normalizeBNodes, null, contextCache) match {
-          case Right(ts) => ts.map(t => EmitRow(key, 0, t.subj, t.pred, t.objKind,
-            t.objValue, t.objDatatype, t.objLang, t.graph, null, -1, null, null))
-          case Left(q) => Vector(EmitRow(key, 1, null, null, 0, null, null, null, null,
-            q.url, q.block_idx, q.errorCode, q.errorDetail))
-        }
+      pageEmit(page, normalizeBNodes, contextCache).flatMap {
+        case Right(ts) => ts.map(t => EmitRow(key, 0, t.subj, t.pred, t.objKind,
+          t.objValue, t.objDatatype, t.objLang, t.graph, null, -1, null, null))
+        case Left(q) => Vector(EmitRow(key, 1, null, null, 0, null, null, null, null,
+          q.url, q.block_idx, q.errorCode, q.errorDetail))
       }
     }
   }
+
+  /** The EmitRow split, triple side: kind-0 rows as the triple columns
+    * plus `partition_key`, deduplicated within the lineage partition
+    * (keys are host-derived, so a page's triples always land in the same
+    * partition; global cross-host dedup is a downstream compaction). */
+  def keyedTriples(emitted: DataFrame): DataFrame =
+    emitted.filter(col("kind") === 0)
+      .select((TripleCols :+ "partition_key").map(col): _*)
+      .dropDuplicates()
+
+  /** The EmitRow split, quarantine side: kind-1 rows as the quarantine
+    * table's columns plus `partition_key`. */
+  def quarantineRows(emitted: DataFrame): DataFrame =
+    emitted.filter(col("kind") === 1)
+      .select(col("url"), col("block_idx"), col("errorCode"), col("errorDetail"),
+        col("partition_key"))
 }

@@ -101,14 +101,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("bad documents are quarantined, not fatal") {
-    import spark.implicits._
     val docs = Seq(
       ExtractedDoc("https://x.example/ok", 0,
         """{"@id":"http://e/s","http://e/p":"v"}""", "jsonld"),
-      ExtractedDoc("https://x.example/bad", 0, """{"@id": nope}""", "jsonld")
-    ).toDS()
-    val ts = TripleEmit.triples(docs).collect()
-    val qs = TripleEmit.quarantine(docs).collect()
+      ExtractedDoc("https://x.example/bad", 0, """{"@id": nope}""", "jsonld"))
+    val results = docs.map(TripleEmit.docToTriples(_, normalizeBNodes = false, null))
+    val ts = results.flatMap(_.getOrElse(Vector.empty))
+    val qs = results.flatMap(_.left.toOption)
     assert(ts.length == 1)
     assert(qs.length == 1 && qs.head.url.endsWith("/bad"))
   }
@@ -117,10 +116,8 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("lineage").toString
     val pages = PageGen.pages(spark, 80, 42L, partitions = 4).toDF()
     val keyed = pages.withColumn("partition_key", Lineage.partitionKeyCol)
-    val triplesKeyed = TripleEmit.emitKeyed(PageGen.pages(spark, 80, 42L, partitions = 4))
-      .filter(col("kind") === 0)
-      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
+    val triplesKeyed = TripleEmit.keyedTriples(
+      TripleEmit.emitKeyed(PageGen.pages(spark, 80, 42L, partitions = 4)).toDF())
     Lineage.writeWithLineage(spark, triplesKeyed, keyed, s"$dir/triples", s"$dir/manifest")
     val manifest = Lineage.readManifest(spark, s"$dir/manifest")
     val pending = Lineage.pendingPages(pages, manifest)
@@ -309,18 +306,16 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("bundled context cache resolves remote @context offline (S1 stand-in)") {
-    import spark.implicits._
     val ctxUrl = "https://ctx.example/v1.jsonld"
     val cache = Map(ctxUrl -> """{"@context":{"name":"http://schema.org/name"}}""")
     val doc = ExtractedDoc("https://a/p", 0,
       s"""{"@context":"$ctxUrl","@id":"https://a/x","name":"Thing"}""", "jsonld")
-    val ds = Seq(doc).toDS()
-    val ts = TripleEmit.triples(ds, contextCache = cache).collect()
-    assert(ts.toSeq == Seq(Triple("https://a/x", "http://schema.org/name", 2, "Thing",
-      "http://www.w3.org/2001/XMLSchema#string", null, "@default")), ts.toSeq)
+    val ts = TripleEmit.docToTriples(doc, normalizeBNodes = false, null, contextCache = cache)
+    assert(ts == Right(Vector(Triple("https://a/x", "http://schema.org/name", 2, "Thing",
+      "http://www.w3.org/2001/XMLSchema#string", null, "@default"))), ts)
     // without the cache the same doc quarantines — never a task failure
-    val q = TripleEmit.quarantine(ds).collect()
-    assert(q.length == 1 && q.head.errorCode == "loading remote context failed", q.toSeq)
+    val q = TripleEmit.docToTriples(doc, normalizeBNodes = false, null)
+    assert(q.left.exists(_.errorCode == "loading remote context failed"), q)
   }
 
   test("corpus framing embeds 1-hop neighborhoods of type-matched roots") {
