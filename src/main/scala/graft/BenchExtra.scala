@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper bench: times a SUBSET of SparkEntry queries
   * with the same action and protocol as graft.Bench (count(), multi-pass,
   * min over successful passes) so per-query A/B comparisons don't pay a
@@ -18,15 +16,9 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchExtra <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cores
     val useNoop = sys.env.get("SPARK_GRAFT_NOOP").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     AuxTables.ensure(spark, sfDir)
     val timeoutMs = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "240").toLong * 1000L
     // same session warm-up as Bench so the first query doesn't absorb JIT

@@ -16,15 +16,9 @@ object KgRun {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/kg_out"
     val nPages = if (args.length > 1) args(1).toLong else 100000L
-    val cores = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(run(spark, PageGen.pages(spark, nPages, 42L, cores.toInt * 4).toDF(), outDir))
+    val cores = if (args.length > 2) args(2).toInt else GraftSession.cores
+    val spark = GraftSession.local(cores)
+    println(run(spark, PageGen.pages(spark, nPages, 42L, cores * 4).toDF(), outDir))
     spark.stop()
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit of the headline queries: prints the properties
   * that matter at 100 TB — scan pushdown (PushedFilters/ReadSchema),
   * WholeStageCodegen coverage, join strategies (broadcast vs sort-merge),
@@ -49,18 +47,11 @@ object PlanAudit {
     // re-audit just the queries they touched)
     val subset = args.drop(1).toSet
     val toAudit = if (subset.isEmpty) audited else audited.filter(subset)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static plans for the audit: AQE re-plans at runtime (and is ON in
-      // every real run); disabling it here exposes the codegen spans and
-      // join choices Catalyst makes from statistics alone
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
+    // static plans for the audit: AQE re-plans at runtime (and is ON in
+    // every real run); disabling it here exposes the codegen spans and
+    // join choices Catalyst makes from statistics alone
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     toAudit.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

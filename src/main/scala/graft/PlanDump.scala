@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for declared queries to files — the
@@ -24,18 +23,11 @@ object PlanDump {
     val suffix = args(2)
     val subset = args.drop(3).toSet
     Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static plans, like PlanAudit: AQE re-plans at runtime; the formatted
-      // dump shows Catalyst's static choices (join strategy, exchanges,
-      // pushdown) which is what the before/after diff should compare
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
+    // static plans, like PlanAudit: AQE re-plans at runtime; the formatted
+    // dump shows Catalyst's static choices (join strategy, exchanges,
+    // pushdown) which is what the before/after diff should compare
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val unknown = subset.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,

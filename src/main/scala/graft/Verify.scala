@@ -41,14 +41,7 @@ object Verify {
     // optional trailing args: dump only these queries (incremental
     // rounds re-verify just what they touched; the driver passes none)
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
     new java.io.File(outDir).mkdirs()
     // materialize the aux oracle tables up front so no query's guard
     // budget is spent building them; queries hit the _READY fast path

@@ -685,32 +685,19 @@ object DedupOps {
     * driver-side graph.
     * Output: (id, comp) where comp = min node id in the component — the
     * canonical "keeper" for dedup resolution (keep rows where id=comp).
-    * The returned frame is locally checkpointed (lineage truncated — the
-    * iterative join chain never recomputes) and carries NO named cache
-    * entry, so driver-run queries don't accumulate cached partitions; the
-    * checkpoint blocks are reclaimed by the ContextCleaner once the frame
-    * is unreferenced (ADVICE r3: the returned cache leaked in every
-    * Verify/Bench run, and the error path leaked the last round's cache).
-    * Fails loudly if labels have not converged within `maxIter` rounds —
-    * silently returning partial components would disagree with the
-    * transitive closure the oracle computes. */
+    * Rounds follow [[Fixpoint.converge]], so the result holds no named
+    * cache entry (a returned cache leaked in every Verify/Bench run, ADVICE
+    * r3) and it fails loudly if labels still change after `maxIter` rounds. */
   def dedupComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // per-round localCheckpoint, not cache: a cache reuses EXECUTION but
-    // leaves the logical plan growing ~3x per round (labels is referenced
-    // by three branches each iteration) — at component diameter ~10+ the
-    // plan tree alone OOMs the driver before any task runs (caught by
-    // GraphPropertySpec's random graphs; production near-dup clusters are
-    // diameter 1-2, which is why cache survived four rounds). Checkpoint
-    // blocks are reclaimed by the ContextCleaner as each round's frame
-    // becomes unreferenced.
+    // `und` and the first labels are checkpointed EAGERLY: no earlier
+    // action materializes them, and round 1 reads labels three ways
     val und = pairs.select(col("a").as("x"), col("b").as("y"))
       .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))
       .distinct().localCheckpoint(true)
-    var labels = und.select(col("x").as("id")).distinct()
+    val labels0 = und.select(col("x").as("id")).distinct()
       .withColumn("comp", col("id")).localCheckpoint(true)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
+    Fixpoint.converge(labels0, maxIter, "dedupComponents") { prev =>
+      val labels = prev.select(col("id"), col("comp"))
       val nbrMin = und
         .join(labels.select(col("id").as("y"), col("comp").as("ycomp")), Seq("y"))
         .groupBy(col("x").as("id")).agg(min(col("ycomp")).as("nbr"))
@@ -728,32 +715,18 @@ object DedupOps {
       // window of every full Bench session (A/B-verified: totals
       // 47-51 s vs 23 s) despite being cheap in isolation. Every comp
       // value is itself a node id, so the jump key always resolves
-      // (left + coalesce only for paranoia).
-      //
-      // Optimization r6: the round's frame CARRIES the previous label
-      // (`old`) instead of re-joining labels for change detection, and
-      // the checkpoint is LAZY — the convergence count() materializes
-      // every partition, so one round = exactly one job (the eager form
-      // ran checkpoint + a join-bearing count = two jobs and one more
-      // equi-join per round). By the time round i+1 references `next`
-      // three ways, its blocks are already materialized by this count.
-      val next = labels
+      // (left + coalesce only for paranoia). The round's frame CARRIES
+      // the previous label (`old`), so change detection needs no
+      // re-join of labels.
+      labels
         .join(nbrMin, Seq("id"), "left")
         .join(labels.select(col("id").as("jump_from"), col("comp").as("jump_to")),
           col("comp") === col("jump_from"), "left")
         .select(col("id"), col("comp").as("old"), least(col("comp"),
           coalesce(col("nbr"), col("comp")),
           coalesce(col("jump_to"), col("comp"))).as("comp"))
-        .localCheckpoint(false)
-      changed = next.filter(col("comp") =!= col("old")).count()
-      labels = next.select(col("id"), col("comp"))
-      i += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"dedupComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing) — component diameter exceeds the bound; raise maxIter")
-    labels
+    }(_.filter(col("comp") =!= col("old")).count(), _ == 0L)
+      .select(col("id"), col("comp"))
   }
 
   /** Incremental connected-components maintenance: fold a batch of NEW
@@ -779,8 +752,7 @@ object DedupOps {
     * [[dedupComponents]] over (old pairs ∪ new edges) —
     * IncrementalComponentsSpec proves rebuild equality on random
     * graphs, and the driver oracle re-derives it by recursive closure. */
-  def incrementalComponents(existingLabels: DataFrame, newEdges: DataFrame,
-      maxIter: Int = 20): DataFrame = {
+  def incrementalComponents(existingLabels: DataFrame, newEdges: DataFrame): DataFrame = {
     // labels feed three branches (two endpoint resolves + the relabel
     // join) — the multi-branch rule; rows are 16-byte (id, comp)
     val labels = existingLabels.select(col("id"), col("comp")).localCheckpoint(true)
@@ -790,7 +762,7 @@ object DedupOps {
       .select(coalesce(col("ca"), col("a")).as("a"),
         coalesce(col("cb"), col("b")).as("b"))
     // delta-sized iterative work: (touched labels + new ids) only
-    val remap = dedupComponents(quotientEdges, maxIter)
+    val remap = dedupComponents(quotientEdges)
     val relabeled = labels
       .join(remap.select(col("id").as("comp"), col("comp").as("merged")),
         Seq("comp"), "left")

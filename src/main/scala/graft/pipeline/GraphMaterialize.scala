@@ -255,8 +255,7 @@ object GraphMaterialize {
     *
     * Eager by contract (components iterate), like [[hubScores]]. */
   def sameAsMerge(triples: DataFrame,
-      sameAsPred: String = "http://schema.org/sameAs",
-      maxIter: Int = 20): DataFrame = {
+      sameAsPred: String = "http://schema.org/sameAs"): DataFrame = {
     val edges = triples
       .filter(col("pred") === sameAsPred && col("objKind") === 0 &&
         col("subj") =!= col("objValue") &&
@@ -269,7 +268,7 @@ object GraphMaterialize {
     // mapping here copied already-cached data in a standalone job for
     // nothing — the two join branches below each re-run only the cheap
     // filter over the cached labels (optimization r6)
-    val mapping = graft.ops.DedupOps.dedupComponents(edges, maxIter)
+    val mapping = graft.ops.DedupOps.dedupComponents(edges)
       .filter(col("id") =!= col("comp"))
     val subjMap = mapping.select(col("id").as("subj"), col("comp").as("subj_c"))
     val objMap = mapping.select(col("id").as("objValue"), col("comp").as("obj_c"))
@@ -980,43 +979,30 @@ object GraphMaterialize {
     *
     * Scale shape: the edge frame is checkpointed once; each peel round is
     * two semi-joins (edges restricted to live endpoints) + one hash agg
-    * on 8-byte-keyed rows + a filter, with the live set checkpointed per
-    * round (O(1) plan depth). Convergence needs O(peel depth) rounds —
-    * bounded by the degeneracy ordering length, in practice ≤ 5 on web
-    * graphs for small k; the loop detects the fixpoint with a bounded
-    * driver-side count per round and REFUSES (raise, not truncate) if
-    * `maxRounds` passes without one, so a silently-unconverged core can
-    * never masquerade as the answer. */
+    * on 8-byte-keyed rows + a filter, rounds per [[graft.ops.Fixpoint.converge]].
+    * Convergence needs O(peel depth) rounds — bounded by the degeneracy
+    * ordering length, in practice ≤ 5 on web graphs for small k; past
+    * `maxRounds` it raises rather than truncate. */
   def kCore(triples: DataFrame, k: Int = 2, maxRounds: Int = 20): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
-    // lazy checkpoints fused with the per-round convergence count: the
-    // count() materializes every partition of the round's frame, so each
-    // round costs exactly ONE job (the eager form ran checkpoint + count
-    // = two; optimization r6). Plan depth unchanged — lineage truncates
-    // at the same frames.
+    require(k >= 1)
     val und = undirectedEdges(triples)
-    var alive = und.select(col("a").as("node"))
+    val nodes = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
       .distinct().localCheckpoint(false)
-    var aliveCount = alive.count()
-    var rounds = 0
-    while (rounds < maxRounds) {
-      rounds += 1
+    var aliveCount = nodes.count()
+    graft.ops.Fixpoint.converge(nodes, maxRounds, s"kCore(k=$k)") { alive =>
       val live = und
         .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
       val deg = live.select(col("a").as("node"))
         .unionByName(live.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-      val next = deg.filter(col("core_deg") >= k).localCheckpoint(false)
-      val nextCount = next.count()
-      if (nextCount == aliveCount) return next
-      alive = next.select(col("node"))
-      aliveCount = nextCount
-      if (aliveCount == 0L) return next.select(col("node"), col("core_deg"))
-    }
-    throw new IllegalStateException(
-      s"kCore(k=$k) did not reach a fixpoint in $maxRounds rounds")
+      deg.filter(col("core_deg") >= k)
+    }(_.count(), { n => // settled: nothing peeled, or nothing left to peel
+      val settled = n == aliveCount || n == 0L
+      aliveCount = n
+      settled
+    })
   }
 
   /** Anchor-text consensus per link target: for every href, the total

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Fixpoint
 
 /** Conjunctive graph-pattern queries over the materialized triples table
   * — the read-side counterpart of the KG-construction spine. Two entry
@@ -212,12 +213,9 @@ object GraphQuery {
     *    a 10^5-out-degree hub multiplies every incoming frontier row) —
     *    their own depth-1 edges still appear;
     *  - each level joins the previous NEW frontier (not the whole
-    *    reachable set) against the edges, anti-joins against the
-    *    accumulated pairs (min-depth semantics for free), and
-    *    checkpoints — the plan stays O(1) deep and a level's shuffle is
-    *    proportional to the frontier, not the closure;
-    *  - early exit on an empty frontier (one bounded count action per
-    *    level, ≤ maxDepth actions total).
+    *    reachable set) against the edges, so a level's shuffle is
+    *    proportional to the frontier, not the closure; levels,
+    *    min-depth anti-join and early exit are [[Fixpoint.levels]].
     *
     * At production scale both `reach` and `edges` are bucketed by their
     * join key so the per-level join co-locates; cycles are handled by the
@@ -278,36 +276,12 @@ object GraphQuery {
       maxDegree: Int): DataFrame = {
     require(maxDepth >= 1, "maxDepth must be >= 1")
     val (edges, extendable) = guardedEdges(pairs, maxDegree)
-
-    // per-level frames are checkpointed LEAVES; the accumulated reach set
-    // is their union (never itself re-checkpointed — Spark 4's
-    // LogicalRDD constraint rewrite chokes on checkpoint-of-union-of-
-    // checkpoints, and the union of ≤ maxDepth materialized leaves is
-    // already O(1)-deep). Lazy checkpoints fused with the frontier
-    // emptiness check: count() materializes every partition of the level
-    // (isEmpty would stop at the first row and leave partitions
-    // unmaterialized), so one level = one job (the eager form ran
-    // checkpoint + isEmpty = two; optimization r6).
-    var levels = List(edges.withColumn("depth", lit(1)).localCheckpoint(false))
-    var frontier = levels.head
-    var d = 1
-    var frontierNonEmpty = frontier.count() > 0
-    while (d < maxDepth && frontierNonEmpty) {
-      d += 1
-      val stepped = frontier.as("f")
+    Fixpoint.levels(edges, 1, maxDepth, Seq("src", "dst"), "depth") { (frontier, _) =>
+      frontier.as("f")
         .join(extendable.as("e"), col("f.dst") === col("e.src"))
         .select(col("f.src").as("src"), col("e.dst").as("dst"))
         .distinct()
-      val seen = levels.map(_.select("src", "dst")).reduce(_ unionByName _)
-      val fresh = stepped
-        .join(seen, Seq("src", "dst"), "left_anti")
-        .withColumn("depth", lit(d))
-        .localCheckpoint(false)
-      levels ::= fresh
-      frontier = fresh
-      frontierNonEmpty = fresh.count() > 0
     }
-    levels.reduce(_ unionByName _)
   }
 
   /** Seeded BFS distances: the minimum hop count from a seed SET to
@@ -328,9 +302,8 @@ object GraphQuery {
     * same hub guard — the FIRST hop out of a seed may leave any node,
     * but paths only extend THROUGH sources with out-degree ≤
     * `maxDegree`. Per level: one key-partitioned join frontier⋈edges
-    * (frontier rows are 8-byte-id + int), one distinct, one anti-join;
-    * each level frame is a checkpointed leaf (the multi-branch rule —
-    * the seen union references every prior level). Eager by contract. */
+    * (frontier rows are 8-byte-id + int), one distinct, one anti-join
+    * ([[Fixpoint.levels]]). Eager by contract. */
   def seededDistances(triples: DataFrame, seeds: Seq[String],
       preds: Seq[String], maxDepth: Int, maxDegree: Int = 1024): DataFrame = {
     require(seeds.nonEmpty, "no seeds")
@@ -338,31 +311,13 @@ object GraphQuery {
     val spark = triples.sparkSession
     import spark.implicits._
     val (edges, extendable) = guardedEdges(predEdges(triples, preds), maxDegree)
-
-    // lazy checkpoint + count() per level, like [[closureOfEdges]]
-    // (optimization r6): one job per BFS level instead of two
-    var levels = List(seeds.distinct.toDF("node")
-      .withColumn("dist", lit(0)).localCheckpoint(false))
-    var frontier = levels.head
-    var d = 0
-    var frontierNonEmpty = frontier.count() > 0
-    while (d < maxDepth && frontierNonEmpty) {
-      d += 1
+    Fixpoint.levels(seeds.distinct.toDF("node"), 0, maxDepth, Seq("node"), "dist") { (frontier, d) =>
       // first hop out of a seed may leave a hub; later hops may not
       val step = if (d == 1) edges else extendable
-      val stepped = frontier.as("f")
+      frontier.as("f")
         .join(step.as("e"), col("f.node") === col("e.src"))
         .select(col("e.dst").as("node")).distinct()
-      val seen = levels.map(_.select("node")).reduce(_ unionByName _)
-      val fresh = stepped
-        .join(seen, Seq("node"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint(false)
-      levels ::= fresh
-      frontier = fresh
-      frontierNonEmpty = fresh.count() > 0
     }
-    levels.reduce(_ unionByName _)
   }
 
   /** SPARQL 1.1 property-path algebra (the composable subset with

@@ -40,6 +40,14 @@ class OpsSpec extends AnyFunSuite {
     assert(comps.values.toSet == Set("n000"), comps.values.toSet)
   }
 
+  test("dedup components: a chain longer than maxIter allows fails loud") {
+    import spark.implicits._
+    // path doubling needs ~log2(64) rounds for a 64-node chain; 2 is too few
+    val pairs = (0 until 63).map(i => (i.toLong, i + 1L)).toDF("a", "b")
+    val e = intercept[IllegalStateException](DedupOps.dedupComponents(pairs, maxIter = 2))
+    assert(e.getMessage.contains("dedupComponents") && e.getMessage.contains("2 rounds"), e.getMessage)
+  }
+
   test("dedup survivors: per-component content argmax, singletons keep themselves") {
     import spark.implicits._
     val docs = Seq((1L, 100L), (2L, 300L), (3L, 300L), (7L, 50L), (8L, 60L), (9L, 10L))

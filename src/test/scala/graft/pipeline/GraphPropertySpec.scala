@@ -608,6 +608,15 @@ class GraphPropertySpec extends AnyFunSuite {
     assert(GraphMaterialize.kCore(df, k = 2).count() == 0L)
   }
 
+  test("kCore: a peel longer than maxRounds fails loud instead of truncating") {
+    import spark.implicits._
+    // a 20-node path peels its two endpoints per round: 10 rounds to empty
+    val rows = (0 until 19).map(i => (s"n$i", "p", 0.toByte, s"n${i + 1}"))
+    val df = rows.toDF("subj", "pred", "objKind", "objValue")
+    val e = intercept[IllegalStateException](GraphMaterialize.kCore(df, k = 2, maxRounds = 3))
+    assert(e.getMessage.contains("kCore(k=2)") && e.getMessage.contains("3 rounds"), e.getMessage)
+  }
+
   test("kCore: the seeded KG corpus reaches its 2-core fixpoint within 3 rounds") {
     // the q_kg_kcore oracle unrolls the peel a fixed 6 rounds; the engine
     // early-exits at the fixpoint. This pins the convergence margin the
